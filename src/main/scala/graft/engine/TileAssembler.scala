@@ -2,7 +2,15 @@ package graft.engine
 
 import graft.geo.TileCoord
 import graft.model._
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.plans.logical.{DeserializeToObject, Filter, Generate,
+  LogicalPlan, MapElements, MapPartitions, Project, RepartitionOperation, Sample,
+  SerializeFromObject, SubqueryAlias, TypedFilter, Union}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.SqlBridge
+import org.apache.spark.sql.types.{DataType, IntegerType}
 import org.apache.spark.util.CollectionAccumulator
 import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
@@ -14,9 +22,13 @@ import scala.collection.mutable.ArrayBuffer
  * `ExternalMergeSort.java` + tile writer `TileArchiveWriter.java`):
  *
  *   kv rows (key=Hilbert tile id, meta=layer|sortKey|id, value=bytes)
- *     .repartitionByRange($"key")          // THE shuffle
+ *     .repartition(buckets, RangeSteer(key, sampled bounds)) // THE shuffle
  *     .sortWithinPartitions(key, meta, value)
  *     .mapPartitions(run-group consecutive key -> encode tile)
+ *
+ * The bounds come from a sample (>= 1%) of the rows under the render
+ * fan-out ([[sampleRangeBounds]]), reduced per task to a fixed-size
+ * reservoir before it reaches the driver.
  *
  * Sorting touches two longs (plus byte tie-break, mirroring the
  * reference's `SortableFeature` unsigned-byte tie-break); every
@@ -126,97 +138,136 @@ object TileAssembler {
   /** Range-steering expression: binary-search the sampled bounds,
     * output the preimage int for the bucket. One lookup per row,
     * evaluated inside the exchange's partitioner projection. */
-  private[engine] case class RangeSteer(child: org.apache.spark.sql.catalyst.expressions.Expression,
-                                        bounds: Array[Long], preimages: Array[Int])
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-      with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-    override def dataType: org.apache.spark.sql.types.DataType =
-      org.apache.spark.sql.types.IntegerType
+  private[engine] case class RangeSteer(child: Expression, bounds: Array[Long], preimages: Array[Int])
+      extends UnaryExpression {
+    override def dataType: DataType = IntegerType
     override protected def nullSafeEval(v: Any): Any = {
       val ip = java.util.Arrays.binarySearch(bounds, v.asInstanceOf[Long])
       preimages(if (ip >= 0) ip else -(ip + 1))
     }
-    override protected def withNewChildInternal(
-        c: org.apache.spark.sql.catalyst.expressions.Expression): RangeSteer = copy(child = c)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val b = ctx.addReferenceObj("bounds", bounds, "long[]")
+      val p = ctx.addReferenceObj("preimages", preimages, "int[]")
+      val ip = ctx.freshName("ip")
+      nullSafeCodeGen(ctx, ev, v =>
+        s"""int $ip = java.util.Arrays.binarySearch($b, $v);
+           |${ev.value} = $p[$ip >= 0 ? $ip : -($ip + 1)];""".stripMargin)
+    }
+    override protected def withNewChildInternal(c: Expression): RangeSteer = copy(child = c)
   }
 
-  /** Doc-sampling fraction for the bound estimate: ~1% of the input
-    * rows rendered through the same fan-out — unbiased in key space
-    * (unlike a take-N head sample, which inherits whatever ordering
-    * the input files have) at ~1% of the render cost. */
+  /** Least fraction of the rows at the sample frontier that the bound
+    * estimate renders: unbiased in key space (unlike a take-N head
+    * sample, which inherits whatever ordering the input files have) at
+    * ~1% of the render cost. */
   private val BoundSampleFraction = 0.01
 
-  /**
-   * SAMPLE-PUSHDOWN key sample: re-execute the kv plan with a
-   * `Sample(fraction)` node injected directly above every file-scan
-   * leaf. Every operator between the scan and the kv rows is a
-   * deterministic per-row transform (parse -> processFeature -> render
-   * fan-out), so sampling the docs first yields exactly the key
-   * distribution of a post-compute sample at a fraction of the cost —
-   * the pushdown `repartitionByRange`'s own sampler cannot do (it
-   * samples its immediate child, recomputing the whole fan-out).
-   * Returns None when the plan has no file-scan leaf to push below.
-   */
-  private[engine] def sampleKeysPushdown(kv: Dataset[Kv]): Option[Array[Long]] = {
-    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Sample}
-    import org.apache.spark.sql.execution.datasources.LogicalRelation
-    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-    import org.apache.spark.sql.functions.col
-    var injected = false
-    val plan: LogicalPlan = kv.queryExecution.logical.transformUp {
-      case lr: LogicalRelation =>
-        injected = true; Sample(0.0, BoundSampleFraction, withReplacement = false, 42L, lr)
-      case dr: DataSourceV2Relation =>
-        injected = true; Sample(0.0, BoundSampleFraction, withReplacement = false, 42L, dr)
-    }
-    if (!injected) return None
-    val spark = kv.sparkSession
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription("assemble: range-bound sample (pushed-down doc sample)")
-    try {
-      Some(org.apache.spark.sql.graftbridge.SqlBridge.ofRows(spark, plan)
-        .select(col("key")).collect().map(_.getLong(0)))
-    } catch { case _: Exception => None }
-    finally sc.setJobDescription(prev)
+  /** Sample points per range bucket, `RangePartitioner`'s default
+    * `samplePointsPerPartitionHint`. */
+  private val SamplePointsPerBucket = 20
+
+  /** 3x the points, as `RangePartitioner.sketch` sizes its sample: the
+    * keys all reservoirs keep together, and the frontier rows a sample
+    * of an input of known size carries. */
+  private def sampleSize(buckets: Int): Double =
+    3.0 * math.min(SamplePointsPerBucket.toDouble * buckets, 1e6)
+
+  /** Operators whose output rows each derive from input rows alone
+    * (mapPartitions counts: the pipeline's are per-row flatMaps), so a
+    * uniform sample of their input yields the key distribution of a
+    * sample of their output. Joins, aggregates, windows, dedup and
+    * limits are not: sampling below a join samples both sides
+    * independently, and below a limit changes which rows it keeps. */
+  private def rowLocal(p: LogicalPlan): Boolean = p match {
+    case _: Project | _: Filter | _: TypedFilter | _: DeserializeToObject |
+         _: SerializeFromObject | _: MapElements | _: MapPartitions | _: Generate |
+         _: RepartitionOperation | _: SubqueryAlias | _: Union =>
+      p.expressions.forall(_.deterministic)
+    case _ => false
   }
 
-  /** Fallback partial-scan sample: `iterator.take(n)` on a spread of
-    * input partitions (pull-based upstream computes only what the take
-    * consumes). Biased toward each partition's head ordering — only
-    * used when no scan leaf exists for [[sampleKeysPushdown]]. */
-  private[engine] def sampleKeysPartial(kv: Dataset[Kv], buckets: Int): Array[Long] = {
-    import org.apache.spark.sql.functions.col
-    val keyRdd = kv.toDF().select(col("key")).rdd
-    val total = keyRdd.getNumPartitions
-    if (total == 0) return Array.empty
-    val k = math.min(total, 16)
-    val picks = (0 until k).map(i => (i.toLong * total / k).toInt).distinct.toArray
-    val perPart = math.min(1 << 16, math.max(4096, buckets * 1024 / picks.length))
+  /** The nodes where a walk down from the root through [[rowLocal]]
+    * operators stops: scans, cached relations, joins, aggregates,
+    * limits. */
+  private def frontier(plan: LogicalPlan): Seq[LogicalPlan] =
+    if (rowLocal(plan)) plan.children.flatMap(frontier) else Seq(plan)
+
+  /** `plan` with `Sample(fraction)` directly above every [[frontier]] node. */
+  private def sampleAtFrontier(plan: LogicalPlan, fraction: Double): LogicalPlan =
+    if (rowLocal(plan)) plan.withNewChildren(plan.children.map(sampleAtFrontier(_, fraction)))
+    else Sample(0.0, fraction, withReplacement = false, 42L, plan)
+
+  /**
+   * The keys of a uniform sample of `kv`, computed by re-running its
+   * plan with the sample pushed down to the row-local frontier, so only
+   * the sampled rows pass through the render fan-out. The plan is taken
+   * after cache substitution: a persisted feature stream is an
+   * `InMemoryRelation` leaf there, and the sample reads the cache
+   * instead of recomputing the ingest.
+   *
+   * It samples 1% of the frontier rows, or more when their count is
+   * known (a materialised cache reports it) and 1% would carry fewer
+   * rows than the reservoirs hold, as `RangePartitioner.sketch` sets
+   * its fraction to sample size / row count: a feature's keys
+   * cluster, so bound quality follows the number of sampled frontier
+   * rows.
+   */
+  private[engine] def boundSample(kv: Dataset[Kv], buckets: Int): DataFrame = {
+    val plan = kv.queryExecution.withCachedData
+    val rows = frontier(plan).map(_.stats.rowCount)
+    val fraction =
+      if (rows.exists(_.isEmpty)) BoundSampleFraction
+      else math.min(1.0, math.max(BoundSampleFraction, sampleSize(buckets) / rows.flatten.sum.toDouble))
+    SqlBridge.ofRows(kv.sparkSession, sampleAtFrontier(plan, fraction)).select(col("key"))
+  }
+
+  /** One job over [[boundSample]]: per task, (keys seen, a uniform
+    * reservoir of at most `reservoir` keys). A non-positive `reservoir`
+    * sizes it from `buckets`; the driver holds at most
+    * tasks × reservoir keys whatever the input size. */
+  private[engine] def sketchKeys(kv: Dataset[Kv], buckets: Int,
+                                 reservoir: Int = 0): Array[(Long, Array[Long])] = {
     val sc = kv.sparkSession.sparkContext
     val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription("assemble: range-bound sample (partial scan)")
-    try sc.runJob(keyRdd,
-      (it: Iterator[org.apache.spark.sql.Row]) => it.take(perPart).map(_.getLong(0)).toArray,
-      picks.toSeq).flatten
-    finally sc.setJobDescription(prev)
+    sc.setJobDescription("assemble: range-bound sample")
+    try {
+      // >= 1% of the frontier rows reach the render, so ~1% as many
+      // tasks carry it, but at least one per slot so the frontier scan
+      // still uses every core. Each task deserialises the render
+      // profile; on the osm benchmark (11 cache partitions, 4 cores)
+      // 4 tasks instead of 11 cut the sample from ~0.4 s to ~0.27 s
+      val sampled = boundSample(kv, buckets).queryExecution.toRdd
+      val keys = sampled.coalesce(math.max(sc.defaultParallelism,
+        math.ceil(sampled.getNumPartitions * BoundSampleFraction).toInt))
+      val parts = keys.getNumPartitions
+      if (parts == 0) return Array.empty
+      val k = if (reservoir > 0) reservoir else math.ceil(sampleSize(buckets) / parts).toInt
+      keys.mapPartitionsWithIndex { (idx, rows) =>
+        val (kept, seen) = SqlBridge.reservoirSampleAndCount(rows.map(_.getLong(0)), k, idx)
+        Iterator.single((seen, kept))
+      }.collect()
+    } finally sc.setJobDescription(prev)
   }
 
-  /** Equal-frequency bounds (deduped) over the pooled key sample. */
-  private[engine] def sampleRangeBounds(kv: Dataset[Kv], buckets: Int): Array[Long] = {
-    if (buckets <= 1) return Array.empty
-    val sample = sampleKeysPushdown(kv).getOrElse(sampleKeysPartial(kv, buckets))
-    if (sample.isEmpty) return Array.empty
-    java.util.Arrays.sort(sample)
-    val bounds = ArrayBuffer.empty[Long]
-    var i = 1
-    while (i < buckets) {
-      val q = sample(((i.toLong * (sample.length - 1)) / buckets).toInt)
-      if (bounds.isEmpty || q > bounds.last) bounds += q
-      i += 1
+  /** Weighted equal-frequency bounds over a [[sketchKeys]] sketch: each
+    * kept key stands for seen / kept rows of its task. */
+  private[engine] def boundsFromSketch(sketch: Array[(Long, Array[Long])],
+                                       buckets: Int): Array[Long] = {
+    val candidates = ArrayBuffer.empty[(Long, Float)]
+    sketch.foreach { case (seen, kept) =>
+      if (kept.nonEmpty) {
+        val weight = (seen.toDouble / kept.length).toFloat
+        kept.foreach(k => candidates += ((k, weight)))
+      }
     }
-    bounds.toArray
+    SqlBridge.determineBounds(candidates, buckets)
   }
+
+  /** At most `buckets - 1` strictly increasing range bounds for `kv`'s
+    * keys. */
+  private[engine] def sampleRangeBounds(kv: Dataset[Kv], buckets: Int): Array[Long] =
+    if (buckets <= 1) Array.empty
+    else boundsFromSketch(sketchKeys(kv, buckets), buckets)
 
   def assemble(kv: Dataset[Kv],
                profile: Profile,
@@ -224,16 +275,12 @@ object TileAssembler {
                gzipTiles: Boolean = true,
                lineage: Option[CollectionAccumulator[PartitionLineage]] = None,
                persistBeforeShuffle: Boolean = false): Dataset[TileBytes] = {
-    val spark = kv.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-
     // `persistBeforeShuffle` is retired (kept for source compat): it
     // existed to keep repartitionByRange's bound-sampling job from
-    // recomputing the render fan-out. The explicit-bounds shuffle below
-    // replaces that full sampling pass with a partial take()-scan, so
-    // the fan-out computes exactly ONCE and nothing needs caching.
-    val pre = partialLabelGridLimit(kv)
+    // recomputing the render fan-out. The bounds below come from a
+    // sample pushed under the fan-out, so the full fan-out computes
+    // exactly ONCE and nothing needs caching.
+    //
     // 6x buckets per slot: per-ROW encode cost varies by zoom region
     // (many tiny tiles pay per-tile gzip/alloc overhead), so equal-row
     // buckets alone leave a 2-3x straggler at the stage tail; finer
@@ -242,12 +289,21 @@ object TileAssembler {
     // occupancy at 0.81-0.86 (last-wave tail); 6x packs it tighter at
     // negligible per-task overhead (16x96 shuffle blocks).
     val targetBuckets = if (numPartitions <= 1) 1 else numPartitions * 6
-    val bounds = sampleRangeBounds(kv, targetBuckets)
+    assembleRanged(kv, sampleRangeBounds(kv, targetBuckets), profile, gzipTiles, lineage)
+  }
+
+  /** [[assemble]] with the range bounds given: bucket i holds the keys
+    * in (bounds(i-1), bounds(i)]. Tile bytes do not depend on the
+    * bounds, only the partition each tile lands in. */
+  private[engine] def assembleRanged(kv: Dataset[Kv], bounds: Array[Long], profile: Profile,
+                                     gzipTiles: Boolean,
+                                     lineage: Option[CollectionAccumulator[PartitionLineage]]
+                                    ): Dataset[TileBytes] = {
+    val spark = kv.sparkSession
+    import spark.implicits._
     val buckets = bounds.length + 1
-    val steer = org.apache.spark.sql.graftbridge.SqlBridge.col(
-      RangeSteer(org.apache.spark.sql.graftbridge.SqlBridge.expr(col("key")),
-        bounds, hashPreimages(buckets)))
-    val sorted = pre
+    val steer = SqlBridge.col(RangeSteer(SqlBridge.expr(col("key")), bounds, hashPreimages(buckets)))
+    val sorted = partialLabelGridLimit(kv)
       .repartition(buckets, steer)
       .sortWithinPartitions(col("key"), col("meta"), col("value"))
     val layers = profile.layers

@@ -149,20 +149,23 @@ object Codecs {
 
   /** Declared `data` chunk size from a RIFF/WAVE header, walking the
     * chunk list (each chunk: 4cc + LE size, padded to even). Returns
-    * -1 when no data chunk is found (malformed container — left to
-    * the AudioSystem parser's own error). */
-  private def riffDataChunkSize(bytes: Array[Byte]): Long = {
+    * -1 when no data chunk is found, or when a chunk size exceeds
+    * Int.MaxValue or points past the end of the bytes (malformed
+    * container — left to the AudioSystem parser's own error). */
+  private[mm] def riffDataChunkSize(bytes: Array[Byte]): Long = {
     def le32(off: Int): Long =
       (bytes(off) & 0xffL) | ((bytes(off + 1) & 0xffL) << 8) |
         ((bytes(off + 2) & 0xffL) << 16) | ((bytes(off + 3) & 0xffL) << 24)
-    if (bytes.length < 12) return -1L
-    var off = 12 // past RIFF<size>WAVE
+    var off = 12L // past RIFF<size>WAVE
     while (off + 8 <= bytes.length) {
-      val id = new String(bytes, off, 4, "US-ASCII")
-      val sz = le32(off + 4)
+      val id = new String(bytes, off.toInt, 4, "US-ASCII")
+      val sz = le32(off.toInt + 4)
       if (id == "data") return sz
-      off += 8 + sz.toInt + (sz.toInt & 1) // chunks pad to even
-      if (sz < 0) return -1L
+      // sz is an unsigned 32-bit size, so next > off; a size over
+      // Int.MaxValue always lands past the end
+      val next = off + 8 + sz + (sz & 1) // chunks pad to even
+      if (next > bytes.length) return -1L
+      off = next
     }
     -1L
   }
