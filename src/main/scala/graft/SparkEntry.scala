@@ -291,8 +291,8 @@ object SparkEntry {
     }),
 
     "q42_pip_partitioned" -> ((s, dir) => {
-      // the BIG-BIG point-in-polygon path: grid-cell equi-join +
-      // exact covers + smallest-id winner — must equal the broadcast
+      // the BIG-BIG point-in-polygon path: grid-cell cogroup + per-cell
+      // STRtree probe + smallest-id winner — must equal the broadcast
       // path, so the oracle is q13's arithmetic re-derivation
       val sf = Docs.pointFeatures(s, dir)
       import s.implicits._

@@ -78,8 +78,16 @@ object GraftCli {
       if (isOsm || vectorFormat.isDefined) null // feature-stream paths
       else if (input.nonEmpty) spark.read.parquet(input)
       else Docs.docs(spark, sfDir)
-    lazy val osmFeatures = graft.engine.Osm.sourceFeatures(
-      spark.read.format("osmpbf").load(input))
+    // every dataset this run persists, in creation order; all are
+    // released when the run ends, so a long-lived session calling run()
+    // repeatedly does not accumulate pinned data
+    val caches = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Dataset[_]]
+    lazy val osmFeatures = {
+      val (features, wayCoords) = graft.engine.Osm.sourceFeaturesAndCache(
+        spark.read.format("osmpbf").load(input))
+      caches += wayCoords
+      features
+    }
     lazy val vectorFeatures: org.apache.spark.sql.Dataset[graft.model.SourceFeature] = {
       import spark.implicits._
       spark.read.format(vectorFormat.get).load(input)
@@ -98,79 +106,79 @@ object GraftCli {
         }
     }
 
-    // unified feature stream (rebalance folded in where the CPU-heavy
-    // parse/render fan-out would otherwise pin to one input split)
-    val baseFeatures: org.apache.spark.sql.Dataset[graft.model.SourceFeature] =
-      if (isOsm) osmFeatures
-      else if (vectorFormat.isDefined) vectorFeatures
-      else if (hillshade) {
-        // raster→vector merge: shade-band polygons union into the same
-        // feature stream — "just another polygon layer". Rebalance the
-        // docs ONCE before both CPU-heavy branches (single-split guard).
-        val balanced = docs.repartition(partitions)
-        Docs.sourceFeatures(balanced)
-          .unionByName(graft.raster.Raster.hillshadeFeatures(balanced))
-      } else Docs.sourceFeatures(docs.repartition(partitions))
-
-    // PIP routing: broadcast index when the polygon layer fits the cap;
-    // otherwise pre-tag points via the partitioned grid join (identical
-    // smallest-id assignment, no driver collect) and let the profile
-    // read the pre-attached tag — a planet-scale polygon layer degrades
-    // to the scale path instead of failing the job
-    var pipIndex: Option[SpatialJoin.PolygonIndex] = None
-    var persisted: Option[org.apache.spark.sql.Dataset[graft.model.SourceFeature]] = None
-    val features: org.apache.spark.sql.Dataset[graft.model.SourceFeature] =
-      if (!pip || profilePath.nonEmpty) baseFeatures
-      else {
-        // the PIP stage scans the feature stream several times (polygon
-        // layer + point split + non-point pass-through + the render
-        // itself) — persist so the expensive OSM/vector parse runs once,
-        // spilling to disk rather than recomputing at planet scale
-        baseFeatures.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        persisted = Some(baseFeatures)
-        // polygon layer: synthesized from sf-dir only when the docs
-        // THEMSELVES come from sf-dir — an explicit --input must be
-        // tagged against its own polygon features, never an unrelated
-        // synthetic layer that happens to also be configured
-        val polysDf =
-          if (sfDir.nonEmpty && input.isEmpty && !isOsm && vectorFormat.isEmpty)
-            Docs.sourceFeatures(Docs.polygonDocs(spark, sfDir)).toDF()
-          else baseFeatures
-            // hillshade shade bands are styling polygons, not admin
-            // areas — they must never become PIP assignment targets
-            .filter((f: graft.model.SourceFeature) => f.source != "raster" &&
-              graft.geo.Geo.fromWkb(f.geom)
-                .isInstanceOf[org.locationtech.jts.geom.Polygonal])
-            .toDF()
-        SpatialJoin.collectPolysIfSmall(polysDf) match {
-          case Some(polys) =>
-            pipIndex = Some(new SpatialJoin.PolygonIndex(polys))
-            baseFeatures
-          case None =>
-            SpatialJoin.attachContainingPolygonTag(baseFeatures, polysDf)
-        }
-      }
-
-    val profile: graft.engine.Profile =
-      if (profilePath.nonEmpty) {
-        val text = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(profilePath)), "UTF-8")
-        if (profilePath.endsWith(".yml") || profilePath.endsWith(".yaml"))
-          graft.dsl.ConfigProfile.compileYaml(text)
-        else graft.dsl.ConfigProfile.compile(text)
-      } else new Pipeline.GraftProfile(
-        pointMaxZoom = maxZoom, lineMaxZoom = maxZoom,
-        polyMaxZoom = math.min(7, maxZoom), pip = pipIndex)
-
     try {
+      // unified feature stream (rebalance folded in where the CPU-heavy
+      // parse/render fan-out would otherwise pin to one input split)
+      val baseFeatures: org.apache.spark.sql.Dataset[graft.model.SourceFeature] =
+        if (isOsm) osmFeatures
+        else if (vectorFormat.isDefined) vectorFeatures
+        else if (hillshade) {
+          // raster→vector merge: shade-band polygons union into the same
+          // feature stream — "just another polygon layer". Rebalance the
+          // docs ONCE before both CPU-heavy branches (single-split guard).
+          val balanced = docs.repartition(partitions)
+          Docs.sourceFeatures(balanced)
+            .unionByName(graft.raster.Raster.hillshadeFeatures(balanced))
+        } else Docs.sourceFeatures(docs.repartition(partitions))
+
+      // PIP routing: broadcast index when the polygon layer fits the cap;
+      // otherwise pre-tag points via the partitioned grid join (identical
+      // smallest-id assignment, no driver collect) and let the profile
+      // read the pre-attached tag — a planet-scale polygon layer degrades
+      // to the scale path instead of failing the job
+      var pipIndex: Option[SpatialJoin.PolygonIndex] = None
+      val features: org.apache.spark.sql.Dataset[graft.model.SourceFeature] =
+        if (!pip || profilePath.nonEmpty) baseFeatures
+        else {
+          // the PIP stage scans the feature stream several times (polygon
+          // layer + point split + non-point pass-through + the render
+          // itself) — persist so the expensive OSM/vector parse runs once,
+          // spilling to disk rather than recomputing at planet scale
+          baseFeatures.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          caches += baseFeatures
+          // polygon layer: synthesized from sf-dir only when the docs
+          // THEMSELVES come from sf-dir — an explicit --input must be
+          // tagged against its own polygon features, never an unrelated
+          // synthetic layer that happens to also be configured
+          val polysDf =
+            if (sfDir.nonEmpty && input.isEmpty && !isOsm && vectorFormat.isEmpty)
+              Docs.sourceFeatures(Docs.polygonDocs(spark, sfDir)).toDF()
+            else baseFeatures
+              // hillshade shade bands are styling polygons, not admin
+              // areas — they must never become PIP assignment targets
+              .filter((f: graft.model.SourceFeature) => f.source != "raster" &&
+                graft.geo.Geo.fromWkb(f.geom)
+                  .isInstanceOf[org.locationtech.jts.geom.Polygonal])
+              .toDF()
+          SpatialJoin.collectPolysIfSmall(polysDf) match {
+            case Some(polys) =>
+              pipIndex = Some(new SpatialJoin.PolygonIndex(polys))
+              baseFeatures
+            case None =>
+              SpatialJoin.attachContainingPolygonTag(baseFeatures, polysDf)
+          }
+        }
+
+      val profile: graft.engine.Profile =
+        if (profilePath.nonEmpty) {
+          val text = new String(java.nio.file.Files.readAllBytes(
+            java.nio.file.Paths.get(profilePath)), "UTF-8")
+          if (profilePath.endsWith(".yml") || profilePath.endsWith(".yaml"))
+            graft.dsl.ConfigProfile.compileYaml(text)
+          else graft.dsl.ConfigProfile.compile(text)
+        } else new Pipeline.GraftProfile(
+          pointMaxZoom = maxZoom, lineMaxZoom = maxZoom,
+          polyMaxZoom = math.min(7, maxZoom), pip = pipIndex)
+
       val tiles = Pipeline.tilesFromFeatures(features, profile,
         numPartitions = partitions, gzipTiles = gzip,
         rebalance = if (vectorFormat.isDefined) partitions else 0)
       Archives.write(tiles, output, metadata, tilesGzipped = gzip)
     } finally {
-      // release the PIP-stage cache: a long-lived session calling run()
-      // repeatedly must not accumulate pinned feature datasets
-      persisted.foreach(_.unpersist())
+      // newest first: a cache built over another (the feature stream
+      // over the way coordinates) goes before it, so unpersisting the
+      // inner one never has Spark rebuild the outer one's entry
+      caches.reverseIterator.foreach(_.unpersist())
     }
   }
 

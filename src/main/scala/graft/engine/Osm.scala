@@ -139,7 +139,14 @@ object Osm {
    */
   def sourceFeatures(entities: DataFrame,
                      relationInfoPred: Column => Column = defaultRelationInfoPred,
-                     splitWays: Boolean = false): Dataset[SourceFeature] = {
+                     splitWays: Boolean = false): Dataset[SourceFeature] =
+    sourceFeaturesAndCache(entities, relationInfoPred, splitWays)._1
+
+  /** [[sourceFeatures]] plus the way-coordinates frame it persists, so
+    * a caller that is done with the features can unpersist it. */
+  private[graft] def sourceFeaturesAndCache(entities: DataFrame,
+                                            relationInfoPred: Column => Column = defaultRelationInfoPred,
+                                            splitWays: Boolean = false): (Dataset[SourceFeature], DataFrame) = {
     val spark = entities.sparkSession
     import spark.implicits._
 
@@ -223,10 +230,10 @@ object Osm {
 
     // cached because BOTH the way-features and relation-features
     // branches read it; Spark's LRU evicts the blocks under memory
-    // pressure (MEMORY_AND_DISK keeps re-reads off the join), and the
-    // session-lifetime pin is bounded by one materialized frame per
-    // sourceFeatures call — callers running many ingests per session
-    // should unpersist the returned plan's cache via Catalog.clearCache
+    // pressure (MEMORY_AND_DISK keeps re-reads off the join). The cache
+    // lives until it is unpersisted: `GraftCli.run` takes it from
+    // [[sourceFeaturesAndCache]] and releases it when the run ends;
+    // [[sourceFeatures]] callers keep it for the session
     val wc = wayCoords(entities)
     wc.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
@@ -347,7 +354,7 @@ object Osm {
           tags - "type", id))
       }
 
-    points.unionByName(wayFeatures).unionByName(relFeatures)
+    (points.unionByName(wayFeatures).unionByName(relFeatures), wc)
   }
 
   /** `.osm.pbf` → encoded tiles: the reference's end-to-end flow on

@@ -16,10 +16,14 @@ import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory
  * reference's in-process `geo/PolygonIndex.java` (envelope prefilter +
  * exact contains post-filter). No shuffle touches the big side.
  *
+ * When the polygon side is too large to broadcast,
+ * [[pointInPolygonPartitioned]] keys both sides by a mercator grid cell
+ * and probes one such index per cell.
+ *
  * kNN: same broadcast-index pattern over polygon/point sites
  * (reference `geo/PointIndex.java`), returning the nearest site within
- * a max distance. For large-large variants, the cell-key equi-join path
- * (`CellJoin`) applies.
+ * a max distance. The S2-cell joins ([[radiusJoinS2]],
+ * [[nearestSiteS2]]) are the scale paths for large site sides.
  */
 object SpatialJoin {
 
@@ -141,8 +145,9 @@ object SpatialJoin {
       val p = Geo.fromWkb(f.geom).asInstanceOf[org.locationtech.jts.geom.Point]
       (f.doc_id, f.source, f.geom, f.tags, f.span_sig, f.relations, p.getX, p.getY)
     }.toDF("doc_id", "source", "geom", "tags", "span_sig", "relations", "__lon", "__lat")
-      // join-back key: duplicates (same doc + same location) are safe —
-      // the assignment is identical for every duplicate row. The NUL
+      // merge key for a polygon side that spans several zooms:
+      // duplicates (same doc + same location) are safe — the
+      // assignment is identical for every duplicate row. The NUL
       // separator keeps distinct (doc_id, lon, lat) triples distinct
       // (no separator would collide e.g. ("way/12", 3.5) with ("way/1", 23.5)
       // and swap polygon assignments between points).
@@ -212,27 +217,38 @@ object SpatialJoin {
 
   /**
    * BIG-BIG point-in-polygon: when the polygon side exceeds the
-   * broadcast cap, both sides key by a mercator grid cell and
-   * equi-join — polygons fan out to the cells their envelope covers,
-   * the exact covers() test filters candidates row-wise, and the
-   * smallest-id winner per point reproduces the broadcast path's
-   * tie-break exactly (the (prefix, numeric-suffix, id) order of
-   * [[idLt]], via min_by over a sortable struct).
+   * broadcast cap, both sides key by a mercator grid cell and meet in
+   * one cogroup. Polygons fan out to the cells their envelope covers;
+   * per cell, the cell's polygons become a [[PolygonIndex]] (STRtree of
+   * prepared polygons) and the cell's points stream through
+   * [[PolygonIndex.firstContaining]] — the broadcast path's probe, so
+   * the smallest-id tie-break ([[idLt]]) is the same by construction.
    *
    * Fan-out is ADAPTIVE per polygon: each polygon keys at the coarsest
    * zoom that keeps its envelope within `maxFanoutCells` cells
    * ([[chooseZoom]]), so a continent- or world-spanning polygon emits
    * O(maxFanoutCells) rows, never 2^(2·gridZoom). Points emit one key
-   * per DISTINCT zoom the polygon side actually uses (usually 1-2) —
-   * keys are disambiguated across zooms by the cumulative zoom offset.
-   * Cells lying entirely INSIDE their polygon are flagged at fan-out
-   * time (prepared covers of the cell rect), letting candidates in
-   * those cells skip the per-point exact test — the slicer's
-   * interior-fill idea applied to the join.
+   * per DISTINCT zoom the polygon side actually uses — keys are
+   * disambiguated across zooms by the cumulative zoom offset.
    *
-   * Shuffle shape: one equi-join on the cell key + one groupBy on the
-   * point id (plus one narrow scan of the polygon side to learn the
-   * zoom set).
+   * Shuffle shape: one narrow scan of the polygon side to learn the
+   * zoom set, then one cogroup (both sides hash-partitioned on the
+   * cell). With one zoom — the usual case — each point meets exactly
+   * one cell, and the cogroup emits every point row with its `poly_id`
+   * directly: no aggregate, no join back to the points. With several
+   * zooms (or none: an empty polygon side) a point meets one cell per
+   * zoom; only then are the per-cell winners merged per `idCol`
+   * (smallest id by [[idLt]]'s order) and joined back, so rows sharing
+   * an `idCol` share that winner.
+   *
+   * Memory: a cell's polygons are held in memory as one STRtree, just
+   * as the broadcast path holds the whole layer; a cell's points are
+   * streamed. A cell with more polygons than a task can hold needs a
+   * finer `gridZoom` (hot cells are not split).
+   *
+   * Output: `idCol`, the other point columns in order, then `poly_id`
+   * (null for uncovered points when `left`, else those rows are
+   * dropped). Points with a null lon/lat never match.
    */
   def pointInPolygonPartitioned(points: DataFrame, polysDf: DataFrame,
                                 gridZoom: Int = 7,
@@ -243,57 +259,86 @@ object SpatialJoin {
                                 maxFanoutCells: Int = 1024): DataFrame = {
     val spark = points.sparkSession
     import spark.implicits._
-    import graft.geo.{Mercator, TileCoord}
+    import graft.geo.TileCoord
+    import org.apache.spark.sql.{Encoders, Row}
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
     // narrow pass: which zooms does the polygon side need?
     val zooms: Seq[Int] = polysDf.select(col(polyGeomCol)).as[Array[Byte]]
       .map(wkb => chooseZoom(Geo.fromWkb(wkb).getEnvelopeInternal, gridZoom, maxFanoutCells))
       .distinct().collect().toSeq.sorted
 
-    val polyCells = polysDf.select(col(polyIdCol).cast("string").as("poly_id"),
-        col(polyGeomCol).as("poly_wkb"))
+    val fields = points.schema.fields
+    val idIdx = points.schema.fieldIndex(idCol)
+    val lonIdx = points.schema.fieldIndex(lonCol)
+    val latIdx = points.schema.fieldIndex(latCol)
+    val polyIdField = StructField("poly_id", StringType, nullable = true)
+
+    val polyCells = polysDf.select(col(polyIdCol).cast("string"), col(polyGeomCol))
       .as[(String, Array[Byte])]
       .flatMap { case (id, wkb) =>
-        val g = Geo.fromWkb(wkb)
-        val env = g.getEnvelopeInternal
+        val env = Geo.fromWkb(wkb).getEnvelopeInternal
         val z = chooseZoom(env, gridZoom, maxFanoutCells)
         val nz = 1 << z
         val (x0, x1, y0, y1) = envWindow(env, z)
-        val prep = PreparedGeometryFactory.prepare(g)
-        val (prefix, num) = splitNumFor(id)
-        for (x <- x0 to x1; y <- y0 to y1) yield {
-          // edge rows extend to the poles: points poleward of the
-          // mercator clamp key into the edge cells, so the covered
-          // flag must account for the full latitude span they map from
-          val latN = if (y == 0) 90.0 else Mercator.lat(y.toDouble / nz)
-          val latS = if (y == nz - 1) -90.0 else Mercator.lat((y + 1).toDouble / nz)
-          val rect = Geo.factory.toGeometry(new Envelope(
-            Mercator.lon(x.toDouble / nz), Mercator.lon((x + 1).toDouble / nz), latS, latN))
-          val covered = prep.covers(rect)
-          (TileCoord.zoomOffset(z) + x.toLong * nz + y, id, wkb, prefix, num, covered)
-        }
-      }.toDF("cell", "poly_id", "poly_wkb", "poly_prefix", "poly_num", "cell_covered")
+        for (x <- x0 to x1; y <- y0 to y1)
+          yield (TileCoord.zoomOffset(z) + x.toLong * nz + y, id, wkb)
+      }.toDF("__cell", "poly_id", "poly_wkb")
+      .groupBy(col("__cell")).as[Long, (Long, String, Array[Byte])]
 
     import graft.functions.GeoFunctions.{world_x, world_y}
     def keyAt(z: Int): org.apache.spark.sql.Column = {
       val nz = 1 << z
       def cellIdx(w: org.apache.spark.sql.Column) =
         least(greatest(floor(w * nz), lit(0)), lit(nz - 1)).cast("long")
-      lit(TileCoord.zoomOffset(z)) +
-        cellIdx(world_x(col(lonCol))) * nz + cellIdx(world_y(col(latCol)))
+      // null when a coordinate is null (`greatest` would skip it)
+      when(col(lonCol).isNotNull && col(latCol).isNotNull, lit(TileCoord.zoomOffset(z)) +
+        cellIdx(world_x(col(lonCol))) * nz + cellIdx(world_y(col(latCol))))
     }
-    val ptCells =
-      if (zooms.isEmpty) points.withColumn("__cell", lit(null).cast("long"))
-      else points.withColumn("__cell", explode(array(zooms.map(keyAt): _*)))
-    val matches = ptCells
-      .join(polyCells, col("__cell") === col("cell"))
-      .where(col("cell_covered") ||
-        graft.functions.SpatialRules.st_contains_lonlat(
-          col("poly_wkb"), col(lonCol), col(latCol)))
-      .groupBy(col(idCol))
-      .agg(min_by(col("poly_id"),
-        struct(col("poly_prefix"), col("poly_num"), col("poly_id"))).as("poly_id"))
-    points.join(matches, Seq(idCol), if (left) "left" else "inner")
+    val oneZoom = zooms.length == 1
+    // a null lon/lat can never meet a polygon: it keys to -1, which no
+    // polygon cell uses (the key stays non-null, as the cogroup needs
+    // both sides' keys typed alike), and only the one-zoom left join
+    // still ships those rows, to emit them with a null poly_id
+    val keyed = points.withColumn("__cell",
+        if (oneZoom) keyAt(zooms.head) else explode(array(zooms.map(keyAt): _*)))
+      .withColumn("__cell", coalesce(col("__cell"), lit(-1L)))
+    val ptCells = if (oneZoom && left) keyed else keyed.where(col("__cell") =!= -1L)
+    val ptGroups = ptCells.groupBy(col("__cell"))
+      .as[Long, Row](Encoders.scalaLong, Encoders.row(ptCells.schema))
+
+    def coord(r: Row, i: Int): Double = r.get(i).asInstanceOf[Number].doubleValue()
+    // one cell: its polygons become an index, its points stream through
+    def probe(rows: Iterator[Row], polys: Iterator[(Long, String, Array[Byte])]): Iterator[(Row, String)] = {
+      val cellPolys = polys.map { case (_, id, wkb) => Poly(id, wkb, Map.empty) }.toArray
+      if (cellPolys.isEmpty) rows.map(r => (r, null))
+      else {
+        val index = new PolygonIndex(cellPolys)
+        rows.map(r => (r, index.firstContaining(coord(r, lonIdx), coord(r, latIdx)).map(_.id).orNull))
+      }
+    }
+
+    if (oneZoom) {
+      // the column order `points.join(matches, Seq(idCol))` produces
+      val outOrder = (idIdx +: fields.indices.filter(_ != idIdx)).toArray
+      ptGroups.cogroup(polyCells) { (_, rows, polys) =>
+        probe(rows, polys).collect { case (r, hit) if hit != null || left =>
+          Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(outOrder.map(r.get) :+ hit))
+        }
+      }(Encoders.row(StructType(outOrder.map(fields(_)) :+ polyIdField))).toDF()
+    } else {
+      val winners = ptGroups.cogroup(polyCells) { (_, rows, polys) =>
+        probe(rows, polys).collect { case (r, hit) if hit != null =>
+          val (prefix, num) = splitNumFor(hit)
+          Row(r.get(idIdx), prefix, num, hit)
+        }
+      }(Encoders.row(StructType(Seq(fields(idIdx), StructField("poly_prefix", StringType),
+        StructField("poly_num", LongType), polyIdField))))
+      val matches = winners.groupBy(col(idCol))
+        .agg(min_by(col("poly_id"),
+          struct(col("poly_prefix"), col("poly_num"), col("poly_id"))).as("poly_id"))
+      points.join(matches, Seq(idCol), if (left) "left" else "inner")
+    }
   }
 
   private[engine] def splitNumFor(s: String): (String, Long) = {
@@ -318,8 +363,10 @@ object SpatialJoin {
       * search; no antimeridian wrap — the geodesic scale path is
       * [[nearestSiteS2]]). The last ring is clamped to exactly
       * maxRadius so a site between the last ×4 ring and the cutoff is
-      * still found — same final-round clamp as the S2 twin. */
+      * still found — same final-round clamp as the S2 twin. Both radii
+      * must be positive: a ring that starts at 0 never grows. */
     def nearest(lon: Double, lat: Double, startRadius: Double, maxRadius: Double): Option[Site] = {
+      requirePositiveRadii(startRadius, maxRadius)
       var r = startRadius
       var last = false
       while (!last) {
@@ -355,10 +402,15 @@ object SpatialJoin {
     }
   }
 
+  /** Rejects non-positive and NaN radii (NaN fails every comparison). */
+  private def requirePositiveRadii(start: Double, max: Double): Unit =
+    require(start > 0 && max > 0, s"radii must be positive: start=$start max=$max")
+
   /** Nearest-site join: broadcast STRtree of sites, probe per partition. */
   def nearestSite(points: DataFrame, sites: Array[Site],
                   lonCol: String = "lon", latCol: String = "lat",
                   maxRadius: Double = 360.0, startRadius: Double = 8.0): DataFrame = {
+    requirePositiveRadii(startRadius, maxRadius)
     val spark = points.sparkSession
     val bcast = spark.sparkContext.broadcast(new SiteIndex(sites))
     val schema = org.apache.spark.sql.types.StructType(points.schema.fields :+
@@ -442,6 +494,7 @@ object SpatialJoin {
                     startRadiusMeters: Double = 1e5,
                     maxRadiusMeters: Double = 2.1e7): DataFrame = {
     import graft.functions.GeoFunctions
+    requirePositiveRadii(startRadiusMeters, maxRadiusMeters)
     val spark = points.sparkSession
     // the per-round cap-cover explode + join is the expensive work; a
     // single-split input (one parquet row group) would pin every round
@@ -457,8 +510,6 @@ object SpatialJoin {
     var resolved: DataFrame = null
     var resolvedCount = 0L
     val total = pointSel.count()
-    require(startRadiusMeters > 0 && maxRadiusMeters > 0,
-      s"radii must be positive: start=$startRadiusMeters max=$maxRadiusMeters")
     // clamp the opening ring so a start radius past the cutoff still
     // runs exactly one round at maxRadius instead of silently skipping
     // the loop and returning every point unmatched

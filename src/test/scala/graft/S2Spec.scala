@@ -283,6 +283,28 @@ class S2NearestSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(idx.nearest(0, 0, startRadius = 8, maxRadius = 100).isEmpty)
   }
 
+  test("SiteIndex.nearest and nearestSite refuse non-positive or NaN radii instead of spinning") {
+    import graft.engine.SpatialJoin
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val idx = new SpatialJoin.SiteIndex(Array(SpatialJoin.Site("s", 1, 1)))
+    // a start ring of 0 (or below) never grows under r *= 4: the
+    // error must come back within the timeout, not after it
+    for ((start, max) <- Seq((0.0, 10.0), (-1.0, 10.0), (Double.NaN, 10.0), (1.0, 0.0), (1.0, Double.NaN))) {
+      val err = Await.result(Future(intercept[IllegalArgumentException](
+        idx.nearest(0, 0, start, max))), 10.seconds)
+      assert(err.getMessage.contains("radii must be positive"), s"start=$start max=$max")
+    }
+    assert(idx.nearest(0, 0, 1.0, 10.0).map(_.id).contains("s"))
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    val pts = Seq(("p", 0.0, 0.0)).toDF("doc_id", "lon", "lat")
+    val err = intercept[IllegalArgumentException](
+      SpatialJoin.nearestSite(pts, Array(SpatialJoin.Site("s", 1, 1)), startRadius = 0.0))
+    assert(err.getMessage.contains("radii must be positive"))
+  }
+
   test("out-of-range levels are refused, not silently wrapped into garbage ids") {
     intercept[IllegalArgumentException](S2.cellId(2.294, 48.858, 31))
     intercept[IllegalArgumentException](S2.cellId(2.294, 48.858, -1))

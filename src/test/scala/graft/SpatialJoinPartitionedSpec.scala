@@ -5,12 +5,129 @@ import graft.geo.Geo
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Big-big point-in-polygon: the grid-cell equi-join path must
+/** Big-big point-in-polygon: the per-cell indexed probe must
   * reproduce the broadcast STRtree path exactly (including the
   * smallest-id tie-break on overlaps) — the scale route once the
   * polygon side exceeds the broadcast cap. */
 class SpatialJoinPartitionedSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
+
+  private def square(cx: Double, cy: Double, h: Double): Array[Byte] =
+    Geo.toWkb(Geo.factory.toGeometry(new org.locationtech.jts.geom.Envelope(cx - h, cx + h, cy - h, cy + h)))
+
+  /** A megacity: one z7 cell holding 2k points and 200 overlapping
+    * squares (ids shuffled, so id order is not insertion order), plus
+    * 1k points and 100 squares spread over many cells, some of them
+    * spanning cell edges. A few points sit on square edges and corners
+    * (covered, not contained), and a few have a null lon or lat. */
+  private lazy val megacity: (Seq[(String, Option[Double], Option[Double])], Seq[(String, Array[Byte])]) = {
+    val r = new java.util.Random(8)
+    val nz = 1 << 7
+    val (w, e) = (graft.geo.Mercator.lon(64.0 / nz), graft.geo.Mercator.lon(65.0 / nz))
+    val (n, so) = (graft.geo.Mercator.lat(44.0 / nz), graft.geo.Mercator.lat(45.0 / nz))
+    def in(lo: Double, hi: Double) = lo + r.nextDouble() * (hi - lo)
+    val (bw, be, bs, bn) = (w + 0.3, e - 0.3, so + 0.3, n - 0.3)
+    val megaSquares = (0 until 200).map(_ => (in(bw, be), in(bs, bn), in(0.02, 0.25)))
+    val spreadSquares = (0 until 100).map(_ => (in(-120, 120), in(-55, 65), in(0.2, 2.0)))
+    val ids = scala.util.Random.javaRandomToRandom(r).shuffle((0 until 300).toList)
+    val polys = (megaSquares ++ spreadSquares).zip(ids).map { case ((cx, cy, h), id) =>
+      (s"adm_$id", square(cx, cy, h)) }
+    val onEdges = megaSquares.take(20).flatMap { case (cx, cy, h) =>
+      Seq((cx - h, cy), (cx + h, cy + h)) }
+    val pts = (0 until 2000).map(_ => (in(bw, be), in(bs, bn))) ++ onEdges ++
+      (0 until 1000).map(_ => (in(-120, 120), in(-55, 65)))
+    val withIds = pts.zipWithIndex.map { case ((lon, lat), i) => (s"pt_$i", Option(lon), Option(lat)) }
+    (withIds ++ Seq(("pt_nolon", None, Some(40.0)), ("pt_nolat", Some(10.0), None),
+      ("pt_none", None, None)), polys)
+  }
+
+  /** poly_id per point id from the partitioned join. */
+  private def assigned(df: org.apache.spark.sql.DataFrame): Map[String, Option[String]] = {
+    val rows = df.select(col("doc_id"), col("poly_id")).collect()
+    val out = rows.map(r => r.getString(0) -> Option(r.getString(1))).toMap
+    assert(out.size == rows.length, "one row per point")
+    out
+  }
+
+  /** The broadcast probe over all polygons: what every point must get. */
+  private def expected(pts: Seq[(String, Option[Double], Option[Double])],
+                       polys: Seq[(String, Array[Byte])]): Map[String, Option[String]] = {
+    val index = new SpatialJoin.PolygonIndex(polys.map { case (id, g) => SpatialJoin.Poly(id, g, Map.empty) }.toArray)
+    pts.map {
+      case (id, Some(lon), Some(lat)) => id -> index.firstContaining(lon, lat).map(_.id)
+      case (id, _, _) => id -> None
+    }.toMap
+  }
+
+  private def checkBothModes(polys: Seq[(String, Array[Byte])], gridZoom: Int): Unit = {
+    import spark.implicits._
+    val (pts, _) = megacity
+    val ptsDf = pts.toDF("doc_id", "lon", "lat")
+    val polysDf = polys.toDF("doc_id", "geom")
+    val want = expected(pts, polys)
+    assert(want.values.count(_.nonEmpty) > 1500, "the fixture must exercise matches")
+    val left = assigned(SpatialJoin.pointInPolygonPartitioned(ptsDf, polysDf, gridZoom = gridZoom, left = true))
+    assert(left == want)
+    Seq("pt_nolon", "pt_nolat", "pt_none").foreach(id => assert(left(id).isEmpty))
+    val inner = assigned(SpatialJoin.pointInPolygonPartitioned(ptsDf, polysDf, gridZoom = gridZoom))
+    assert(inner == want.collect { case (k, v @ Some(_)) => k -> v })
+  }
+
+  test("megacity cell: every point gets PolygonIndex.firstContaining, inner and left") {
+    checkBothModes(megacity._2, gridZoom = 7)
+  }
+
+  test("megacity cell with a world polygon: the mixed-zoom merge keeps the smallest id") {
+    val world = Geo.toWkb(Geo.fromWktOrNull("POLYGON ((-180 -90, 180 -90, 180 90, -180 90, -180 -90))"))
+    // adm_150 sits mid-range: it must lose to smaller megacity ids and
+    // beat larger ones, across the zoom-0 and zoom-7 cells
+    checkBothModes(megacity._2 :+ ("adm_150" -> world), gridZoom = 7)
+  }
+
+  test("output columns keep the join's order: idCol, the other point columns, poly_id") {
+    import spark.implicits._
+    val polys = Seq(("adm_1", square(10, 10, 5))).toDF("doc_id", "geom")
+    val pts = Seq((10.0, "p1", 10.0, 7L), (50.0, "p2", 50.0, 8L)).toDF("lon", "doc_id", "lat", "extra")
+    for (left <- Seq(false, true)) {
+      val out = SpatialJoin.pointInPolygonPartitioned(pts, polys, left = left)
+      assert(out.columns.toSeq == Seq("doc_id", "lon", "lat", "extra", "poly_id"))
+      assert(out.schema.map(_.dataType) == Seq(pts.schema("doc_id"), pts.schema("lon"),
+        pts.schema("lat"), pts.schema("extra")).map(_.dataType) :+ org.apache.spark.sql.types.StringType)
+      val rows = out.collect().map(r => (r.getString(0), r.getDouble(1), r.getDouble(2), r.getLong(3),
+        Option(r.getString(4)))).toSet
+      val hit = ("p1", 10.0, 10.0, 7L, Some("adm_1"))
+      assert(rows == (if (left) Set(hit, ("p2", 50.0, 50.0, 8L, None)) else Set(hit)))
+      // an empty polygon side: same columns, nothing matches
+      val none = SpatialJoin.pointInPolygonPartitioned(pts, polys.limit(0), left = left)
+      assert(none.columns.toSeq == out.columns.toSeq)
+      assert(none.collect().map(r => (r.getString(0), Option(r.getString(4)))).toSet ==
+        (if (left) Set(("p1", None), ("p2", None)) else Set.empty))
+    }
+  }
+
+  test("one-zoom physical plan: one cogroup, no aggregate, no join back") {
+    import org.apache.spark.sql.execution.{CoGroupExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import spark.implicits._
+    val (pts, polys) = megacity
+    val ptsDf = pts.toDF("doc_id", "lon", "lat")
+    def plan(p: Seq[(String, Array[Byte])], left: Boolean): SparkPlan =
+      SpatialJoin.pointInPolygonPartitioned(ptsDf, p.toDF("doc_id", "geom"), left = left)
+        .queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.inputPlan
+        case other => other
+      }
+    def shape(p: SparkPlan) = (p.collect { case c: CoGroupExec => c }.length,
+      p.collect { case a: BaseAggregateExec => a }.length, p.collect { case j: BaseJoinExec => j }.length)
+    for (left <- Seq(false, true))
+      assert(shape(plan(polys, left)) == ((1, 0, 0)), s"left=$left")
+    // with a second zoom the per-point merge and the join back return
+    val world = Geo.toWkb(Geo.fromWktOrNull("POLYGON ((-180 -90, 180 -90, 180 90, -180 90, -180 -90))"))
+    val (cogroups, aggs, joins) = shape(plan(polys :+ ("adm_0" -> world), left = true))
+    assert(cogroups == 1 && aggs > 0 && joins == 1)
+  }
 
   test("partitioned PIP equals the broadcast path on the admin fixture") {
     import spark.implicits._
